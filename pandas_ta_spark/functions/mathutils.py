@@ -2,8 +2,9 @@
 
 Twins of ``pandas_ta/utils/_math.py#pascals_triangle``, ``#fibonacci``,
 ``#symmetric_triangle``, ``#weights`` — computed driver-side as plain
-Python lists and baked into lag-expression dot products (functions/
-windows.py::wroll), so the weights never cross the JVM boundary at runtime.
+Python lists, applied by the kernel dot product (functions/pdkernels.py
+``wroll_pd``) and baked into its DuckDB twin (functions/windows.py
+``sql_wroll``).
 """
 
 from __future__ import annotations

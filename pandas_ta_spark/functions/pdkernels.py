@@ -213,16 +213,60 @@ def roll_cmom_pd(x: pd.Series, n: int, k: int) -> pd.Series:
 
 
 def wroll_pd(x: pd.Series, weights: list[float], normalize: bool = True) -> pd.Series:
-    """Elementwise twin of windows.wroll: left-associated
-    0 + (w0/T)*x + (w1/T)*x.shift(1) + ... — identical float-op order, so
-    results are bit-equal to the Catalyst lag-sum expression; shift-NaN
-    poisoning reproduces the count>=n warmup mask for prefix-NaN series."""
+    """Weighted rolling dot product (the WROLL kind: wma/pwma/fwma/swma/
+    sinwma/alma/hma/coppock/cg/rvgi), twin of ``windows.sql_wroll``.
+
+    ``weights[i]`` multiplies lag i (weights[0] = current row). The sum
+    accumulates left to right as ``0.0 + w0*x + w1*lag1 + ...`` with one
+    elementwise multiply and one add per term (no BLAS dot, no fused
+    multiply-add), the float-op order of the window expression it
+    replaced, so outputs are bit-equal to it. The first ``n - 1`` rows are
+    NaN, and a NaN anywhere in a frame poisons that frame's output: the
+    twin of the ``count(x) >= n`` warmup mask."""
+    v = x.to_numpy(dtype="float64")
     total = sum(weights) if normalize else 1.0
-    acc = 0.0
+    m = len(v)
+    acc = np.zeros(m)
     for i, w in enumerate(weights):
-        term = x if i == 0 else x.shift(i)
-        acc = acc + (w / total) * term
-    return acc
+        if i < m:
+            acc[i:] += (w / total) * v[:m - i]
+        acc[:i] = np.nan
+    return pd.Series(acc, index=x.index)
+
+
+_I64_MAX = np.iinfo(np.int64).max
+_I64_MIN = np.iinfo(np.int64).min
+
+
+def floor_long_np(x: np.ndarray) -> np.ndarray:
+    """Spark's ``floor(DOUBLE)`` (a LONG): the JVM double->long cast of
+    floor(x), which maps NaN to 0 and saturates at the int64 bounds."""
+    f = np.floor(x)
+    out = np.zeros(len(f), dtype=np.int64)
+    with np.errstate(invalid="ignore"):
+        mid = np.abs(f) < 2.0 ** 63
+        out[mid] = f[mid].astype(np.int64)
+        out[f >= 2.0 ** 63] = _I64_MAX
+        out[f <= -2.0 ** 63] = _I64_MIN
+    return out
+
+
+def running_sum_np(v: np.ndarray, starts: np.ndarray | None = None) -> np.ndarray:
+    """Running sum restarted at every index in ``starts`` (the first row
+    of each window partition), row by row as Spark's running-frame
+    ``sum`` updates: ``0 + v0``, then ``+ v1``, ... in row order (np.cumsum
+    is sequential; pandas' grouped cumsum is Kahan-compensated and would
+    not match). int64 sums wrap like the JVM's non-ANSI long sum."""
+    v = np.asarray(v)
+    out = np.empty_like(v)
+    bounds = [0] if starts is None else list(starts)
+    bounds.append(len(v))
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        seg = v[s:e].copy()
+        if len(seg):
+            seg[0] = seg[0] + 0  # coalesce(sum, 0) + v0: -0.0 -> 0.0
+        out[s:e] = np.cumsum(seg)
+    return out
 
 
 EPS = 2.220446049250313e-16  # float64 machine eps (non_zero_range twin)

@@ -1,12 +1,15 @@
 """Window-spec builders, warmup masks, and SQL twins.
 
-The heart of the engine: ~70% of reference ops are ROLL/WROLL/CUM window
-kinds (SURVEY.md §2.10). Everything here produces Catalyst expressions over
-``Window.partitionBy("symbol").orderBy("ts")`` so that an arbitrary number
-of indicators sharing that spec collapse into a handful of WindowExec
-operators after ONE exchange + ONE sort (SURVEY.md §4.2) — the property
-that keeps a 100-indicator strategy at a single shuffle on a 1000-executor
-cluster.
+The ROLL/CUM/lag ops that still run as Catalyst expressions (min/max
+frames, the fixed-point cumulative sums, short diffs, the signal ops)
+build on the helpers here: every expression is over
+``Window.partitionBy("symbol").orderBy("ts")``, so any number of
+indicators sharing that spec collapse into a handful of WindowExec
+operators after ONE exchange + ONE sort (SURVEY.md §4.2). The rolling
+means/sums/dispersions, the WROLL family (wma, hma, alma, coppock, ...)
+and the headline lag and running-sum ops (mom, roc, vwap, obv) run in the
+Arrow kernel pass instead (functions/pdkernels.py, plans/kernels.py); of
+those, only their ``sql_*`` twins live here, as DuckDB oracles.
 
 Warmup parity (SURVEY.md §4.3.1): pandas ``rolling(n)`` emits NaN for the
 first n-1 rows; Spark would emit partial aggregates over the short leading
@@ -132,25 +135,6 @@ def sql_cumsum_int(src_sql: str, scale: float = CUM_SCALE) -> str:
             f" OVER ({SQL_W_ALL})")
 
 
-def wroll(src: Column | str, weights: list[float], normalize: bool = True) -> Column:
-    """Weighted rolling dot-product (WROLL kind: wma/pwma/fwma/sinwma/alma/
-    cg/swma families — SURVEY.md §2 legend).
-
-    Expressed as a sum of lag() terms: for the short windows TA uses
-    (n <= ~60) this stays inside whole-stage codegen and shares the single
-    (symbol, ts) sort — no collect_list materialization, no Python.
-    weights[i] multiplies lag i (weights[0] = current row).
-    """
-    src_col = F.col(src) if isinstance(src, str) else src
-    n = len(weights)
-    total = sum(weights) if normalize else 1.0
-    acc = F.lit(0.0)
-    for i, w in enumerate(weights):
-        term = src_col if i == 0 else F.lag(src_col, i).over(w_order())
-        acc = acc + F.lit(w / total) * term
-    return masked(acc, src if isinstance(src, str) else src_col, n)
-
-
 def shift(src: Column | str, k: int = 1) -> Column:
     """pandas Series.shift(k) — F.lag over the canonical ordering."""
     src_col = F.col(src) if isinstance(src, str) else src
@@ -256,6 +240,8 @@ def sql_const_guard(src_sql: str, n: int, then_sql: str, else_sql: str) -> str:
 
 
 def sql_wroll(src_sql: str, weights: list[float], normalize: bool = True) -> str:
+    """Weighted rolling dot product as a sum of lag() terms — the oracle
+    of pdkernels.wroll_pd (weights[i] multiplies lag i)."""
     n = len(weights)
     total = sum(weights) if normalize else 1.0
     terms = []

@@ -13,9 +13,11 @@ Each reference op (SURVEY.md §2) becomes a factory returning an
 - ``sql_stages``/``sql_final``: the same pipeline as ANSI SQL expression
   strings over the ``bars`` relation — compiled by ``oracle()`` into the
   DuckDB oracle query for the driver's correctness gate.
-- ``kernel``: for EWM/KERNEL kinds — a pandas function run per-symbol via
-  one Arrow-batched ``applyInPandas`` pass (plans/kernels.py). Kernel ops
-  may still declare SQL twins (recursive CTE oracles) via ``sql_full``.
+- ``kernel``: a pandas function run per-symbol via one Arrow-batched
+  ``applyInPandas`` pass (plans/kernels.py) — the EWM/KERNEL kinds and
+  the ROLL/WROLL/lag/CUM ops absorbed into that pass. Kernel ops keep
+  their SQL twins as oracles only (``sql_final``/``sql_stages``, or
+  recursive CTEs via ``sql_full``).
 
 Design note (not a port): the reference evaluates each indicator eagerly in
 pandas (``pandas_ta/core.py``); here an indicator is pure *plan* — nothing

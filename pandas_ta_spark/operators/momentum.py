@@ -1,9 +1,10 @@
 """momentum/ package ops (SURVEY.md §2.1).
 
-Window-expressible ops (ROLL/WROLL/PROJ) compile to Catalyst window
-expressions over the shared (symbol, ts) spec; the RSI/MACD families are
-SMA-seeded exponential recursions (functions/pdkernels.py) run in the
-batched Arrow kernel pass, each with an exact recursive-CTE DuckDB oracle
+PROJ ops and a few short lag/ROLL ops (slope, bop, ...) compile to Catalyst
+expressions over the shared (symbol, ts) spec. The rolling, WROLL and lag
+ops (mom, roc, coppock, cci, ...) and the RSI/MACD families (SMA-seeded
+exponential recursions, functions/pdkernels.py) run in the batched Arrow
+kernel pass; the recursions have exact recursive-CTE DuckDB oracles
 (operators/ewm_sql.py).
 """
 
@@ -17,8 +18,6 @@ from pandas_ta_spark.functions.pdkernels import ema_pd, rma_pd
 from pandas_ta_spark.functions.windows import (
     SQL_W_ORDER,
     diff,
-    masked,
-    roll,
     shift,
     sql_diff,
     sql_masked,
@@ -27,8 +26,6 @@ from pandas_ta_spark.functions.windows import (
     sql_w_rows,
     sql_wroll,
     w_order,
-    w_rows,
-    wroll,
     sql_const_guard,
 )
 from pandas_ta_spark.operators.base import Indicator, KernelSpec
@@ -52,20 +49,43 @@ def _sql_nzr(a: str, b: str) -> str:
 
 # ------------------------------------------------------------ PROJ/ROLL ----
 
+def _close_and_lag(pdf, k: int):
+    """(close, close k rows back) as numpy arrays (NaN before row k)."""
+    c = pdf["close"]
+    return c.to_numpy(dtype="float64"), c.shift(k).to_numpy(dtype="float64")
+
+
+def _roc_np(c, prev):
+    """100 * (c - prev) / prev; a zero prev gives NULL (non-ANSI x/0)."""
+    from pandas_ta_spark.functions.pdkernels import div0_np
+
+    return div0_np(100 * (c - prev), prev)
+
+
 def mom(length: int = 10):
     """c - c.shift(n) — pandas_ta/momentum/mom.py#mom."""
     out = name("MOM", length)
+
+    def fn(pdf):
+        c, prev = _close_and_lag(pdf, length)
+        pdf[out] = c - prev
+        return pdf
+
     return Indicator("mom", [out], CAT,
-                     final={out: diff("close", length)},
+                     kernel=KernelSpec(fn, [out], ["close"], carry_rows=length),
                      sql_final={out: sql_diff("close", length)})
 
 
 def roc(length: int = 10):
     """100*(c - c.shift(n))/c.shift(n) — pandas_ta/momentum/roc.py#roc."""
     out = name("ROC", length)
-    prev = shift("close", length)
+
+    def fn(pdf):
+        pdf[out] = _roc_np(*_close_and_lag(pdf, length))
+        return pdf
+
     return Indicator("roc", [out], CAT,
-                     final={out: 100 * (F.col("close") - prev) / prev},
+                     kernel=KernelSpec(fn, [out], ["close"], carry_rows=length),
                      sql_final={out: f"100 * ({sql_diff('close', length)}) / ({sql_shift('close', length)})"})
 
 
@@ -322,15 +342,24 @@ def coppock(length: int = 10, fast: int = 11, slow: int = 14):
     pandas_ta/momentum/coppock.py#coppock."""
     out = name("COPC", fast, slow, length)
     t = f"_copc_roc_{fast}_{slow}"
-    rf = 100 * (F.col("close") - shift("close", fast)) / shift("close", fast)
-    rs = 100 * (F.col("close") - shift("close", slow)) / shift("close", slow)
     ws = list(reversed(mu.linear_weights(length)))
+
+    def fn(pdf):
+        import pandas as pd
+
+        from pandas_ta_spark.functions.pdkernels import wroll_pd
+
+        t_ = (_roc_np(*_close_and_lag(pdf, fast))
+              + _roc_np(*_close_and_lag(pdf, slow)))
+        pdf[out] = wroll_pd(pd.Series(t_, index=pdf.index), ws)
+        return pdf
+
     s_rf = f"100 * ({sql_diff('close', fast)}) / ({sql_shift('close', fast)})"
     s_rs = f"100 * ({sql_diff('close', slow)}) / ({sql_shift('close', slow)})"
     return Indicator(
         "coppock", [out], CAT,
-        stages=[{t: rf + rs}],
-        final={out: wroll(t, ws)},
+        kernel=KernelSpec(fn, [out], ["close"],
+                          carry_rows=max(fast, slow) + length - 1),
         sql_stages=[{t: f"({s_rf}) + ({s_rs})"}],
         sql_final={out: sql_wroll(t, ws)},
     )

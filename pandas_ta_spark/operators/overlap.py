@@ -1,10 +1,10 @@
 """overlap/ package ops (SURVEY.md §2.2) — moving averages & price overlays.
 
-Every factory returns an ``Indicator`` carrying both the Catalyst
-expression pipeline and its DuckDB oracle twin. ROLL/WROLL/PROJ ops stay
-entirely JVM-side (whole-stage codegen over one shared (symbol, ts) window
-sort); EWM ops run as pandas kernels in the single batched applyInPandas
-pass (plans/kernels.py).
+Every factory returns an ``Indicator`` carrying its execution plan and its
+DuckDB oracle twin. PROJ ops and the min/max ROLL ops are Catalyst
+expressions; the rolling means, the WROLL family, the anchored cumulative
+vwap and the EWM ops run as pandas kernels in the single batched
+applyInPandas pass (plans/kernels.py).
 """
 
 from __future__ import annotations
@@ -18,14 +18,11 @@ from pandas_ta_spark.functions.windows import (
     SQL_W_ORDER,
     masked,
     roll,
-    shift,
     sql_masked,
     sql_roll,
     sql_shift,
     sql_wroll,
     w_order,
-    w_rows,
-    wroll,
 )
 from pandas_ta_spark.operators.base import Indicator, KernelSpec
 
@@ -237,38 +234,49 @@ def _wr(n: int) -> str:
     return sql_w_rows(n)
 
 
-def _weighted(key: str, kind: str, length: int, weights: list[float], src: str = "close"):
-    out = name(kind, length)
+def _wroll_kernel(key: str, out: str, weights: list[float], src: str = "close"):
+    """One WROLL indicator: the kernel dot product (pdkernels.wroll_pd)
+    with its DuckDB twin. Row t reads rows [t - n + 1, t]."""
+    def fn(pdf):
+        from pandas_ta_spark.functions.pdkernels import wroll_pd
+
+        pdf[out] = wroll_pd(pdf[src], weights)
+        return pdf
+
     return Indicator(key, [out], CAT,
-                     final={out: wroll(src, weights)},
+                     kernel=KernelSpec(fn, [out], [src],
+                                       carry_rows=len(weights) - 1),
                      sql_final={out: sql_wroll(src, weights)})
 
 
 def wma(length: int = 10, src: str = "close"):
     """Linear-weighted MA — pandas_ta/overlap/wma.py#wma.
     wroll weights are newest-first: weight n for lag 0 ... 1 for lag n-1."""
-    return _weighted("wma", "WMA", length, list(reversed(mu.linear_weights(length))), src)
+    return _wroll_kernel("wma", name("WMA", length),
+                         list(reversed(mu.linear_weights(length))), src)
 
 
 def pwma(length: int = 10):
     """Pascal-weighted MA — pandas_ta/overlap/pwma.py#pwma (symmetric)."""
-    return _weighted("pwma", "PWMA", length, mu.pascals_triangle(length, weighted=True))
+    return _wroll_kernel("pwma", name("PWMA", length),
+                         mu.pascals_triangle(length, weighted=True))
 
 
 def fwma(length: int = 10):
     """Fibonacci-weighted MA — pandas_ta/overlap/fwma.py#fwma (asc: newest
     gets the largest Fibonacci weight -> reversed for lag order)."""
-    return _weighted("fwma", "FWMA", length, list(reversed(mu.fibonacci(length))))
+    return _wroll_kernel("fwma", name("FWMA", length),
+                         list(reversed(mu.fibonacci(length))))
 
 
 def swma(length: int = 10):
     """Symmetric-triangle-weighted MA — pandas_ta/overlap/swma.py#swma."""
-    return _weighted("swma", "SWMA", length, mu.symmetric_triangle(length))
+    return _wroll_kernel("swma", name("SWMA", length), mu.symmetric_triangle(length))
 
 
 def sinwma(length: int = 14):
     """Sine-weighted MA — pandas_ta/overlap/sinwma.py#sinwma (symmetric)."""
-    return _weighted("sinwma", "SINWMA", length, mu.sine_weights(length))
+    return _wroll_kernel("sinwma", name("SINWMA", length), mu.sine_weights(length))
 
 
 def alma(length: int = 10, sigma: float = 6.0, distribution_offset: float = 0.85):
@@ -277,9 +285,7 @@ def alma(length: int = 10, sigma: float = 6.0, distribution_offset: float = 0.85
     oldest bar, lag order reverses."""
     out = name("ALMA", length, sigma, distribution_offset)
     ws = list(reversed(mu.alma_weights(length, sigma, distribution_offset)))
-    return Indicator("alma", [out], CAT,
-                     final={out: wroll("close", ws)},
-                     sql_final={out: sql_wroll("close", ws)})
+    return _wroll_kernel("alma", out, ws)
 
 
 def hma(length: int = 10):
@@ -291,10 +297,17 @@ def hma(length: int = 10):
     w_full = list(reversed(mu.linear_weights(length)))
     w_root = list(reversed(mu.linear_weights(root)))
     tmp = f"_hma_{length}_raw"
+
+    def fn(pdf):
+        from pandas_ta_spark.functions.pdkernels import wroll_pd
+
+        c = pdf["close"]
+        pdf[out] = wroll_pd(2 * wroll_pd(c, w_half) - wroll_pd(c, w_full), w_root)
+        return pdf
+
     return Indicator(
         "hma", [out], CAT,
-        stages=[{tmp: 2 * wroll("close", w_half) - wroll("close", w_full)}],
-        final={out: wroll(tmp, w_root)},
+        kernel=KernelSpec(fn, [out], ["close"], carry_rows=length + root - 2),
         sql_stages=[{tmp: f"2 * ({sql_wroll('close', w_half)}) - ({sql_wroll('close', w_full)})"}],
         sql_final={out: sql_wroll(tmp, w_root)},
     )
@@ -302,30 +315,70 @@ def hma(length: int = 10):
 
 # ----------------------------------------------------------------- CUM ----
 
+# date_trunc units the vwap kernel reproduces: Spark's format names
+# (case-insensitive) -> the numpy datetime64 unit of the truncation
+_TRUNC_UNITS = {
+    "year": "Y", "yyyy": "Y", "yy": "Y", "quarter": "Q",
+    "month": "M", "mon": "M", "mm": "M", "week": "W",
+    "day": "D", "dd": "D", "hour": "h", "minute": "m", "second": "s",
+}
+
+
+def _trunc_key(ts, unit: str):
+    """An int64 key equal for two rows iff ``date_trunc`` maps them to the
+    same period. ``ts`` is the kernel's wall-clock time: Arrow hands
+    pandas UDFs TIMESTAMP values as naive times in the session time zone,
+    the zone Spark's date_trunc truncates in. Weeks start on Monday
+    (1970-01-01 was a Thursday)."""
+    import numpy as np
+
+    if unit == "Q":
+        return ts.astype("datetime64[M]").astype(np.int64) // 3
+    if unit == "W":
+        return (ts.astype("datetime64[D]").astype(np.int64) + 3) // 7
+    return ts.astype(f"datetime64[{unit}]").astype(np.int64)
+
+
 def vwap(anchor: str = "day"):
     """Anchored VWAP: cumulative sum(hlc3*v)/sum(v) within (symbol, anchor
-    period) — pandas_ta/overlap/vwap.py#vwap. The anchor becomes part of the
-    window partition key, so at scale each day's accumulation is independent
-    (no cross-day state; partition pruning applies on the anchor)."""
-    from pyspark.sql import Window
-
+    period) — pandas_ta/overlap/vwap.py#vwap. The period is
+    ``date_trunc(anchor, ts)`` in the session time zone; the running sums
+    restart at each period's first bar."""
+    try:
+        unit = _TRUNC_UNITS[anchor.lower()]
+    except KeyError:
+        raise ValueError(f"vwap anchor {anchor!r} not in {sorted(_TRUNC_UNITS)}") from None
     out = f"VWAP_{anchor[0].upper()}"
-    tp = (F.col("high") + F.col("low") + F.col("close")) / 3
-    w = (
-        Window.partitionBy("symbol", F.date_trunc(anchor, F.col("ts")))
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # fixed-point numerator: deterministic across engines/partition orders
-    # (see functions/windows.py cumsum_fixed); volume sums are integers
-    # already and stay exact
-    q = F.floor(tp * F.col("volume") * 1e8 + F.lit(0.5)).cast("long")
-    e = (F.sum(q).over(w) / F.lit(1e8)) / F.sum("volume").over(w)
+
+    def fn(pdf):
+        import numpy as np
+
+        from pandas_ta_spark.functions.pdkernels import (
+            div0_np, floor_long_np, running_sum_np,
+        )
+
+        key = _trunc_key(pdf["ts"].to_numpy(), unit)
+        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        tp = (pdf["high"].to_numpy() + pdf["low"].to_numpy()
+              + pdf["close"].to_numpy()) / 3
+        v = pdf["volume"].to_numpy(dtype="float64")
+        # fixed-point numerator: floor(...) is a Spark LONG (NaN -> 0,
+        # saturating) and the int64 running sum wraps like Spark's
+        # non-ANSI long sum, so in range the numerator is exact and
+        # independent of summation order; volume sums are integers
+        # already and stay exact
+        q = floor_long_np(tp * v * 1e8 + 0.5)
+        num = running_sum_np(q, starts).astype("float64") / 1e8
+        pdf[out] = div0_np(num, running_sum_np(v, starts))
+        return pdf
+
     sw = (f"PARTITION BY symbol, date_trunc('{anchor}', ts) ORDER BY ts "
           f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
     s = (f"(sum(CAST(floor((high + low + close) / 3 * volume * 1e8 + 0.5) AS BIGINT))"
          f" OVER ({sw}) / 1e8) / sum(volume) OVER ({sw})")
-    return Indicator("vwap", [out], CAT, final={out: e}, sql_final={out: s})
+    return Indicator("vwap", [out], CAT,
+                     kernel=KernelSpec(fn, [out], ["high", "low", "close", "volume"]),
+                     sql_final={out: s})
 
 
 # ----------------------------------------------------------------- EWM ----

@@ -1,9 +1,10 @@
 """volume/ package ops (SURVEY.md §2.7).
 
-Mostly CUM (expanding sums over the shared ordering) and ROLL ratios; the
-ADOSC/EFI/KVO family are EWM kernels with recursive-CTE oracles. ``vp``
-(volume profile) is the one true AGG op — a small bucketed table, exposed
-via its own query shape.
+The fixed-point CUM ops (ad, pvt, nvi, pvi) are expanding-sum Catalyst
+expressions over the shared ordering; obv and the ROLL ratios run in the
+Arrow kernel pass, as do the ADOSC/EFI/KVO EWM kernels (recursive-CTE
+oracles). ``vp`` (volume profile) is the one true AGG op — a small
+bucketed table, exposed via its own query shape.
 """
 
 from __future__ import annotations
@@ -16,14 +17,11 @@ from pandas_ta_spark.functions.windows import (
     SQL_W_ALL,
     cumsum_fixed,
     diff,
-    roll,
     shift,
     sql_cumsum_fixed,
     sql_diff,
     sql_roll,
     sql_shift,
-    w_all,
-    w_order,
 )
 from pandas_ta_spark.operators.base import Indicator, KernelSpec
 from pandas_ta_spark.operators.ewm_sql import EwmStage, ewm_pipeline_sql
@@ -47,15 +45,26 @@ def obv():
     """cumsum(sign(diff(c)) * v), first sign = +1 —
     pandas_ta/volume/obv.py#obv."""
     out = "OBV"
-    rn = F.row_number().over(w_order())
-    sgn = F.when(rn == 1, F.lit(1.0)).otherwise(F.signum(diff("close", 1)))
     t = "_obv_sv"
+
+    def fn(pdf):
+        import numpy as np
+
+        from pandas_ta_spark.functions.pdkernels import running_sum_np
+
+        d = pdf["close"].diff().to_numpy(dtype="float64")
+        # signum keeps a zero's sign and passes NaN through (Math.signum)
+        sgn = np.where(d == 0, d, np.sign(d))
+        if len(sgn):
+            sgn[0] = 1.0
+        pdf[out] = running_sum_np(sgn * pdf["volume"].to_numpy(dtype="float64"))
+        return pdf
+
     s_rn = "row_number() OVER (PARTITION BY symbol ORDER BY ts)"
     s_sgn = f"CASE WHEN {s_rn} = 1 THEN 1.0 ELSE sign({sql_diff('close', 1)}) END"
     return Indicator(
         "obv", [out], CAT,
-        stages=[{t: sgn * F.col("volume")}],
-        final={out: F.sum(t).over(w_all())},
+        kernel=KernelSpec(fn, [out], ["close", "volume"]),
         sql_stages=[{t: f"({s_sgn}) * volume"}],
         sql_final={out: f"sum({t}) OVER ({SQL_W_ALL})"},
     )

@@ -1,4 +1,5 @@
-"""Batched per-symbol kernel runner (EWM + KERNEL kinds).
+"""Batched per-symbol kernel runner (ROLL + WROLL + lag + CUM + EWM +
+KERNEL kinds).
 
 The reference runs ~35 indicators as exponential recursions or per-row
 Python state machines (SURVEY.md §2 legend EWM/KERNEL — ema, rsi, macd,
@@ -6,7 +7,14 @@ supertrend, psar, kama, ...). These are not expressible as SQL window
 functions, so they run as ONE ``groupBy("symbol").applyInPandas`` pass:
 Arrow ships each symbol's bars to Python once, every requested kernel
 column is computed vectorized in pandas (the reference's own substrate, so
-parity is exact), and Arrow ships the result back.
+parity is exact), and Arrow ships the result back. The same pass absorbs
+the window kinds whose JVM cost dominated a strategy: rolling means, sums
+and dispersions (ROLL), the weighted dot products (WROLL: wma, hma, alma,
+coppock, ...), lag ops (mom, roc) and the running sums vwap and obv (CUM).
+Each reproduces the float-op order of the window expression it replaced,
+so a strategy of only these kinds plans as one scan plus one Python pass:
+no Window stage and no (symbol, ts) sort, only the pass's own sort on the
+grouping key.
 
 Scale notes (100 TB):
 - one shuffle on symbol, independent of how many kernels are requested —
@@ -201,8 +209,8 @@ def _make_runner(specs: list[KernelSpec], max_rows: int | None = None):
         # Sort the NARROW frame only and splice outputs back through the
         # inverse permutation: gathering the wide pass-through frame
         # (Arrow gives one block per column) costs ~0.8s/group at 127
-        # cols, and inside a strategy rows already arrive ts-sorted from
-        # the window stage, so the common case skips the sort entirely.
+        # cols. Rows arrive ts-sorted when a window stage ran first (a
+        # strategy with expression indicators), which skips the sort.
         # Row order of the returned group is irrelevant to Spark.
         ts = pdf["ts"].to_numpy()
         perm = None if _is_sorted(ts) else np.argsort(ts, kind="stable")

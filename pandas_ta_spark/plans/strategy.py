@@ -5,13 +5,17 @@ loops over indicators, optionally fanning out with multiprocessing and
 pickling the whole DataFrame per task. Here a strategy is declarative
 composition (SURVEY.md §3.3):
 
-- every KERNEL/EWM indicator's pandas kernel is batched into a SINGLE
+- every kernel indicator's pandas kernel is batched into a SINGLE
   ``groupBy("symbol").applyInPandas`` pass (one shuffle + one Arrow
-  round-trip regardless of kernel count);
-- every window-expressible indicator contributes Column expressions over
-  the shared ``Window.partitionBy("symbol").orderBy("ts")`` spec, which
-  Catalyst collapses into one WindowExec chain after one exchange + one
-  sort (SURVEY.md §4.2).
+  round-trip regardless of kernel count). That covers the EWM/KERNEL
+  kinds and the ROLL/WROLL/lag/CUM ops converted from window expressions
+  (sma, wma, hma, mom, roc, vwap, obv, ...), so bench.py's 24-indicator
+  headline strategy has no Window stage at all;
+- the remaining window-expressible indicators (PROJ, min/max frames,
+  fixed-point cumulative sums, short diffs, signals) contribute Column
+  expressions over the shared ``Window.partitionBy("symbol").orderBy("ts")``
+  spec, which Catalyst collapses into one WindowExec chain after one
+  exchange + one sort (SURVEY.md §4.2).
 
 Net: a 50-indicator strategy costs the same shuffles as one indicator.
 """
@@ -228,8 +232,8 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
                         raise ValueError(
                             f"strategy temp column '{tname}' redefined "
                             f"with a different expression by {ind.key} — "
-                            "parameterize the temp name (see hma's "
-                            "_hma_{length}_raw convention)")
+                            "parameterize the temp name (see sma's "
+                            "_sma_{length}_cum convention)")
                     layer[tname] = expr
         if layer:
             df = df.withColumns(layer)
@@ -339,8 +343,8 @@ def expression_lookback(ind: Indicator):
     # Depths COMPOSE across stages: stage k's windows read stage k-1's
     # temps, so a row of stage-k output needs (stage-k depth) rows of
     # stage k-1, each of which needs (stage k-1 depth) rows of input —
-    # hma(16) = wroll(close,16) then wroll(tmp,4) truly needs 15+3 rows,
-    # not max(15,3). Summing per-stage maxima is the exact bound for a
+    # a 16-row frame over a temp built from a 4-row lag chain truly needs
+    # 15+4 rows, not max(15,4). Summing per-stage maxima is the exact bound for a
     # linear stage chain and a safe over-estimate when a later stage
     # reads bar columns directly.
     def _depth_of(exprs) -> int:
@@ -348,7 +352,7 @@ def expression_lookback(ind: Indicator):
         d = 0
         for m in re.finditer(r"(\d+)\s+PRECEDING", t):
             d = max(d, int(m.group(1)))
-        # lag offsets: sql_shift/sql_wroll always emit `lag(<expr>, N)
+        # lag offsets: sql_shift always emits `lag(<expr>, N)
         # OVER`; match the offset right before `) OVER` so nested parens
         # in <expr> don't confuse the scan. A bare `lag(x) OVER`
         # (offset 1) never occurs in generated SQL but costs nothing.

@@ -1527,15 +1527,17 @@ def test_chunked_strategy_rejects_deep_and_unbounded_expressions(bars):
     (vwap's anchored cumsum, decay's row_number) can never chunk."""
     import pytest as _pytest
 
-    from pandas_ta_spark.operators import overlap, trend
+    from pandas_ta_spark.operators import momentum, overlap, trend
     from pandas_ta_spark.plans.strategy import (
         apply_strategy_chunked, expression_lookback,
     )
 
-    # expression-path depth rejection (wma(50): a 50-lag chain; sma
-    # became an Arrow kernel in r14's ROLL absorption, so the deep-sma
-    # refusal now comes from the kernel carry_rows check below)
+    # expression-path depth rejection (slope(50): a 50-row lag; sma and
+    # wma became Arrow kernels, so their deep-window refusals now come
+    # from the kernel carry_rows check)
     with _pytest.raises(ValueError, match="more history than"):
+        apply_strategy_chunked(bars, [momentum.slope(50)], lookback=30)
+    with _pytest.raises(ValueError, match="bounded-lookback"):
         apply_strategy_chunked(bars, [overlap.wma(50)], lookback=30)
     with _pytest.raises(ValueError, match="bounded-lookback"):
         apply_strategy_chunked(bars, [overlap.sma(50)], lookback=30)
@@ -1543,9 +1545,10 @@ def test_chunked_strategy_rejects_deep_and_unbounded_expressions(bars):
         apply_strategy_chunked(bars, [overlap.vwap()], lookback=30)
     with _pytest.raises(ValueError, match="position-dependent|unbounded"):
         apply_strategy_chunked(bars, [trend.decay(5)], lookback=30)
-    # introspected depths: wma(20) lags 19 back (mask + lag chain);
-    # kernel-converted sma declares its history via carry_rows instead
-    assert expression_lookback(overlap.wma(20)) == 19
+    # introspected depth of an expression op; kernel-converted sma and
+    # wma declare their history via carry_rows instead
+    assert expression_lookback(momentum.slope(20)) == 20
+    assert overlap.wma(20).kernel.carry_rows == 19
     assert overlap.sma(20).kernel.carry_rows == 19
     assert overlap.sma(50).kernel.carry_rows == 49
     assert expression_lookback(trend.decay(5)) is None
@@ -1890,12 +1893,10 @@ def test_expression_lookback_classifies_every_registry_op(spark):
         else:
             assert 0 <= d < 10_000, (key, d)
             n_bounded += 1
-    # sanity: all three classes are populated, and most expression ops
-    # are bounded (the chunkable common case)
-    assert n_kernel > 50
-    assert n_bounded > 40
-    assert n_unbounded > 5
-    assert n_bounded > n_unbounded
+    # the exact census: a conversion between the expression and kernel
+    # paths must update it on purpose, and no op is left unclassified
+    assert (n_kernel, n_bounded, n_unbounded) == (122, 37, 10)
+    assert n_kernel + n_bounded + n_unbounded == len(_SUITE)
 
 
 def test_chunked_strategy_property_parity(spark):

@@ -34,8 +34,10 @@ def _frame(spark, n=1200, symbols=("A", "B")):
     return spark.createDataFrame(pd.concat(frames)).repartition(3)
 
 
-# (factory path, kwargs) for every kernel converted in r14 with a finite
-# carry — xsignals/hilo are unbounded-state (carry None) and never chunk
+# (factory path, kwargs) for every kernel converted from a window
+# expression with a finite carry (the ROLL ops, then the WROLL family and
+# the lag ops from wma onward) — xsignals/hilo/vwap/obv are
+# unbounded-state (carry None) and never chunk
 CONVERTED = [
     ("momentum.ao", {}), ("momentum.apo", {}), ("momentum.bias", {}),
     ("momentum.cmo", {}), ("momentum.cg", {}), ("momentum.cfo", {}),
@@ -51,6 +53,10 @@ CONVERTED = [
     ("overlap.linreg", {"mode": "intercept"}),
     ("overlap.linreg", {"mode": "r"}), ("overlap.linreg", {"mode": "tsf"}),
     ("overlap.sma", {"length": 20}),
+    ("overlap.wma", {}), ("overlap.pwma", {}), ("overlap.fwma", {}),
+    ("overlap.swma", {}), ("overlap.sinwma", {}), ("overlap.alma", {}),
+    ("overlap.hma", {}), ("momentum.coppock", {}), ("momentum.mom", {}),
+    ("momentum.roc", {}),
 ]
 
 
