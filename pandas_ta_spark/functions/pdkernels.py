@@ -117,7 +117,7 @@ def _swv_apply(v: np.ndarray, window: int, fn) -> np.ndarray:
 # mean/sum recompute per frame (swv) rather than pandas' online rolling
 # accumulator: the online path's last-ulp output depends on where the
 # series STARTS, which would break exact chunk-and-carry equality
-# (plans/kernels.py _run_chunked) and run-to-run determinism under
+# (plans/kernels.row_chunks) and run-to-run determinism under
 # repartitioning. Per-frame recompute is start-point independent.
 def roll_mean_pd(x: pd.Series, n: int) -> pd.Series:
     v = x.to_numpy(dtype="float64")
@@ -349,7 +349,7 @@ def _ols_frames(v: np.ndarray, n: int, combine, x0: float = 0.0) -> np.ndarray:
     (xAvg, yAvg, ck, xMk, yMk, x_end) -> output vector. x positions are
     the global 1-based row numbers (the SQL twins regress against
     row_number() OVER the symbol order). ``x0`` is the 0-based global
-    position of v[0]: under epoch-chunked execution each chunk sees only
+    position of v[0]: under chunked execution each chunk sees only
     a slice of the symbol's rows, and OLS rounding is shift-sensitive,
     so the chunk must regress against the same global x as the whole
     group (whole groups pass 0)."""
@@ -371,7 +371,7 @@ def _ols_frames(v: np.ndarray, n: int, combine, x0: float = 0.0) -> np.ndarray:
 
 def global_x0(pdf) -> float:
     """0-based global row position of a kernel frame's first row:
-    _pts_rn0 under epoch-chunked execution (the runner hands kernels a
+    _pts_rn0 under chunked execution (the runner hands kernels a
     ts-sorted frame, and _pts_rn0 is monotone in ts), 0.0 for whole
     groups. Shift-sensitive kernels (the OLS family) pass this as x0 so
     chunked x equals whole-group x bit-for-bit."""

@@ -241,10 +241,10 @@ class KernelSpec:
 
     ``carry_rows``: finite history bound — the kernel's output at row t is
     exactly determined by rows [t - carry_rows, t] (FIR/rolling kernels).
-    Lets plans/kernels.py split huge symbol groups into (symbol, epoch)
-    chunks with a carried overlap (SURVEY §4.3.4) — bounded memory AND
-    within-symbol parallelism. None = unbounded state (IIR recursions,
-    state machines): whole-group execution, or streaming/ for unbounded."""
+    Lets the strategy router split a hot symbol into row chunks with a
+    carried overlap (plans/kernels.row_chunks, SURVEY §4.3.4) — bounded
+    memory AND within-symbol parallelism. None = unbounded state (IIR
+    recursions, state machines): whole-group execution, or streaming/."""
 
     fn: Callable  # (pd.DataFrame) -> pd.DataFrame (appends outputs)
     outputs: list[str]
@@ -252,8 +252,9 @@ class KernelSpec:
     carry_rows: int | None = None
     # forward dependency bound: output at row t also reads rows
     # (t, t + lead_rows] (non-causal columns, e.g. ichimoku's chikou
-    # lead). Chunked execution carries this many LEADING rows of epoch
-    # e+1 back into epoch e (plans/kernels.py _run_chunked).
+    # lead). Row-chunked execution copies this many LEADING rows of chunk
+    # k+1 back into chunk k (plans/kernels.row_chunks); the time-chunked
+    # route carries forward only, so it refuses such kernels.
     lead_rows: int = 0
     # the kernel's FP rounding depends on each row's global position in
     # its symbol's ts order (the OLS family regresses against
@@ -283,19 +284,13 @@ class Indicator:
         ``offset`` shifts every output by k rows and ``fillna``/
         ``fill_method`` patch warmup NULLs — the reference's universal
         post-processing kwargs (pandas_ta/utils/_core.py#get_offset,
-        every indicator's ``# Handle fills`` block)."""
-        if self.kernel is not None:
-            from pandas_ta_spark.plans.kernels import run_kernels
+        every indicator's ``# Handle fills`` block).
 
-            df = run_kernels(df, [self.kernel])
-        temps: list[str] = []
-        for stage in self.stages:
-            df = df.withColumns(stage)
-            temps.extend(stage.keys())
-        if self.final:
-            df = df.withColumns(self.final)
-        if temps and not keep_temps:
-            df = df.drop(*temps)
+        The outputs come from a one-indicator strategy, so a hot symbol
+        is chunked by the same router as any strategy."""
+        from pandas_ta_spark.plans.strategy import apply_strategy
+
+        df = apply_strategy(df, [self], keep_temps)
         post = {}
         if offset:
             from pandas_ta_spark.functions.windows import shift

@@ -284,7 +284,7 @@ def tos_stdevall(stds: tuple = (1, 2, 3)):
 
     Runs in the Arrow kernel pass (the seven whole-partition regr_*/
     stddev window aggregates were the second-heaviest window indicator);
-    whole-series dependency means unbounded carry (no epoch chunking —
+    whole-series dependency means unbounded carry (no row chunking —
     inherent to the op's semantics, it regresses over the ENTIRE series).
 
     Cross-engine exactness (r12, fuzz seed-sweep find): the float

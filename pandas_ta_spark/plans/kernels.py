@@ -19,17 +19,18 @@ grouping key.
 Scale notes (100 TB):
 - one shuffle on symbol, independent of how many kernels are requested —
   a strategy with 30 EWM indicators costs the same exchange as one;
-- constraint: a whole (symbol) group must fit in one executor's memory
-  (SURVEY.md §4.3.4). Time-series are naturally bounded per symbol
-  (~1e7 rows); for longer series, chunk by (symbol, epoch) and carry seed
-  rows across epochs — see streaming/ for the stateful variant;
+- the pass always runs whole symbol groups, so a group must fit in one
+  executor's memory (SURVEY.md §4.3.4; the runner raises past
+  MAX_GROUP_ROWS). A hot symbol is split by the strategy router, the one
+  place that decides to chunk: ``apply_strategy`` sends finite-carry
+  kernels through ``row_chunks`` below (row chunks plus carried seed
+  rows, bit-identical to whole groups), and unbounded-state kernels stay
+  whole — see streaming/ for the stateful variant;
 - pandas ewm/cum kernels are O(n) sequential per group but vectorized in C,
   measured at 1e8 rows/s (BASELINE.md) — the per-group sort dominates.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -37,53 +38,16 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from pandas_ta_spark.operators.base import KernelSpec
 
 # per-(symbol) group memory bound (SURVEY §4.3.4): a whole group must fit
-# one executor. 20M rows x ~8 cols x 8B ~= 1.3 GB — beyond that, chunk by
-# (symbol, epoch) and carry seed state (see streaming/indicators.py for
-# the state-carry pattern).
-MAX_GROUP_ROWS = int(os.environ.get("PTS_MAX_KERNEL_GROUP_ROWS", 20_000_000))
-
-
-# Epoch-chunked execution: when every kernel in the pass declares a finite
-# carry (FIR/rolling kernels), a symbol group larger than this splits into
-# (symbol, epoch) chunks of CHUNK_ROWS rows; the trailing max(carry) rows
-# of each epoch are duplicated into the next as warm-up context and their
-# outputs dropped — results are EXACTLY the unchunked ones, memory is
-# bounded per task, and one hot symbol parallelizes across executors.
-CHUNK_ROWS = int(os.environ.get("PTS_KERNEL_CHUNK_ROWS", 5_000_000))
-
-
-def _maybe_exceeds_rows(df: DataFrame, rows: int) -> bool:
-    """Could ANY symbol group hold >= ``rows`` rows? Decided from the
-    optimizer's ESTIMATES (parquet footers / cache metadata — no job).
-    A defined rowCount (cached relations, CBO stats) answers exactly;
-    otherwise an input under rows x 8 bytes cannot contain that many
-    rows at any layout, so small frames skip the epoch-chunked path —
-    its groupBy(symbol, epoch) costs an Exchange that the whole-group
-    pass avoids when the input is already hash(symbol)-clustered
-    (bucketed tables, the strategy's window stage). Unknown stats stay
-    chunked: the r13 behavior, and the memory-safe default. Residual
-    risk (ADVICE r14): sizeInBytes is COMPRESSED bytes, so a
-    dictionary/RLE-heavy input below 8 B/row could skip chunking while
-    holding chunk-sized groups — bounded, not silent: the whole-group
-    runner hard-errors past MAX_GROUP_ROWS (20M rows ~ 1.3 GB) instead
-    of OOMing, and rowCount short-circuits the estimate wherever Spark
-    knows it."""
-    try:
-        st = df._jdf.queryExecution().optimizedPlan().stats()
-        rc = st.rowCount()
-        if rc.isDefined():
-            return int(str(rc.get())) >= rows
-        return int(str(st.sizeInBytes())) >= rows * 8
-    except Exception:
-        return True
+# one executor. 20M rows x ~8 cols x 8B ~= 1.3 GB — beyond that the
+# runner raises instead of OOMing the executor.
+MAX_GROUP_ROWS = 20_000_000
 
 
 # Bucket width for the two-level rank (global_rn0): per-symbol ranks are
 # computed bucket-parallel; a bucket only bounds the per-task sort, never
 # correctness. One day of microseconds suits bar/tick data (1e3-1e5 rows
-# per symbol-day); override for exotic densities.
-RANK_BUCKET_US = int(os.environ.get("PTS_RANK_BUCKET_US",
-                                    86_400_000_000))
+# per symbol-day); pass ``bucket_us`` for exotic densities.
+RANK_BUCKET_US = 86_400_000_000
 
 
 def global_rn0(df: DataFrame, out: str = "_pts_rn0",
@@ -105,13 +69,23 @@ def global_rn0(df: DataFrame, out: str = "_pts_rn0",
     this engine make. Worst case (a symbol entirely inside one bucket)
     degrades to the old bucket-serial sort, never to a wrong rank, and
     the offset window always runs on the narrow 3-column count relation.
+
+    NULL keys keep their rows, as the single window does: a NULL
+    symbol's series ranks in one bucket (offset 0 — the offsets join
+    is a left join because NULL never equals NULL), and a NULL ts takes
+    the lowest bucket, so it ranks first like ``ORDER BY ts``. The join
+    keys stay the raw (symbol, bucket) columns, so an input already
+    clustered by symbol needs no exchange for the rank.
     Output column order: df's columns, then ``out``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     b_us = RANK_BUCKET_US if bucket_us is None else bucket_us
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    b = df.withColumn("_pts_bkt", F.floor(us / F.lit(b_us)).cast("long"))
+    bkt = F.coalesce(F.floor(us / F.lit(b_us)).cast("long"),
+                     F.lit(-(2 ** 63)))
+    b = df.withColumn("_pts_bkt", F.when(F.col("symbol").isNull(), F.lit(0))
+                      .otherwise(bkt))
     wb = Window.partitionBy("symbol", "_pts_bkt").orderBy("ts")
     counts = b.groupBy("symbol", "_pts_bkt").count()
     woff = (Window.partitionBy("symbol").orderBy("_pts_bkt")
@@ -122,13 +96,58 @@ def global_rn0(df: DataFrame, out: str = "_pts_rn0",
     ).select("symbol", "_pts_bkt", "_pts_off")
     ranked = (
         b.withColumn("_pts_brn", F.row_number().over(wb))
-        .join(offs, ["symbol", "_pts_bkt"])
-        .withColumn(out, F.col("_pts_off") + F.col("_pts_brn") - F.lit(1))
+        .join(offs, ["symbol", "_pts_bkt"], "left")
+        .withColumn(out, F.coalesce(F.col("_pts_off"), F.lit(0))
+                    + F.col("_pts_brn") - F.lit(1))
     )
     # restore df's column order (the join fronts its keys); backticks:
     # pass-through names may be dotted (BBL_5_2.0)
     return ranked.select(*[F.col(f"`{c}`") for c in df.columns],
                          F.col(out))
+
+
+def row_chunks(df: DataFrame, chunk_rows: int, carry: int,
+               lead: int) -> DataFrame:
+    """Split every symbol into row chunks with their carries — the one
+    chunk construction behind the row-chunked strategy route.
+
+    Chunk k of a symbol is rows [k*chunk_rows, (k+1)*chunk_rows) of its
+    ts order (``global_rn0``, kept as ``_pts_rn0`` so position-dependent
+    kernels see global x). Each row EXPLODES into its own entry
+    (``_carry`` 0) plus a copy for chunk k+1 when it sits in chunk k's
+    last ``carry`` positions, plus a copy for chunk k-1 when it sits in
+    chunk k's first ``lead`` positions (non-causal kernels such as
+    ichimoku's chikou read ``lead`` rows ahead); copies have ``_carry``
+    1 and their outputs are dropped after the pass. With
+    ``chunk_rows >= max(carry, lead)`` every kept row sees exactly the
+    history and future the unchunked series gives it. No union, so the
+    rank subtree is evaluated once per action (the union shape re-ran
+    the per-symbol sort 3x: 9.3s -> 6.5s on the 1.6M-row skew bench).
+    Forward copies from a symbol's last chunk land in a chunk of their
+    own that holds only copies — computed over <= carry rows and fully
+    dropped, cheaper than a successor map that suppresses them."""
+    from pyspark.sql import functions as F
+
+    rn = F.col("_pts_rn0")
+    chk = F.floor(rn / F.lit(chunk_rows)).cast("long")
+    pos = rn % F.lit(chunk_rows)
+
+    def entry(c, is_copy):
+        return F.struct(c.alias("_chk"), F.lit(is_copy).alias("_carry"))
+
+    entries = [entry(chk, 0),
+               F.when(pos >= F.lit(chunk_rows - carry), entry(chk + 1, 1))]
+    if lead > 0:
+        entries.append(F.when((pos < F.lit(lead)) & (chk > 0),
+                              entry(chk - 1, 1)))
+    return (
+        global_rn0(df)
+        .select("*", F.explode(F.filter(F.array(*entries),
+                                        lambda x: x.isNotNull())).alias("_pc"))
+        .withColumn("_chk", F.col("_pc._chk"))
+        .withColumn("_carry", F.col("_pc._carry"))
+        .drop("_pc")
+    )
 
 
 def _out_schema(df: DataFrame, specs: list[KernelSpec]) -> StructType:
@@ -144,10 +163,11 @@ def _out_schema(df: DataFrame, specs: list[KernelSpec]) -> StructType:
     return StructType(list(df.schema.fields) + new_fields)
 
 
-def run_kernels(
-    df: DataFrame, specs: list[KernelSpec], chunk_rows: int | None = None
-) -> DataFrame:
-    """Append every spec's output columns in a single applyInPandas pass."""
+def run_kernels(df: DataFrame, specs: list[KernelSpec]) -> DataFrame:
+    """Append every spec's output columns in a single applyInPandas pass
+    over whole symbol groups. Chunking a hot symbol is the strategy
+    router's decision (``plans/strategy.apply_strategy``), made once for
+    kernels and window expressions alike."""
     if not specs:
         return df
     # applyInPandas resolves pass-through columns by unquoted name; dotted
@@ -155,22 +175,14 @@ def run_kernels(
     dotted = {c: c.replace(".", "․") for c in df.columns if "." in c}
     if dotted:
         df = df.withColumnsRenamed(dotted)
-        out = run_kernels(df, specs, chunk_rows)
+        out = run_kernels(df, specs)
         return out.withColumnsRenamed({v: k for k, v in dotted.items()})
-    carries = [s.carry_rows for s in specs]
-    leads = [s.lead_rows for s in specs]
-    chunk = CHUNK_ROWS if chunk_rows is None else chunk_rows
-    if (all(c is not None for c in carries)
-            and chunk > max(carries, default=0)
-            and chunk > max(leads, default=0)
-            and _maybe_exceeds_rows(df, chunk)):
-        return _run_chunked(df, specs, chunk, max(carries), max(leads))
     out_schema = _out_schema(df, specs)
-    runner = _make_runner(specs, MAX_GROUP_ROWS)
+    runner = _make_runner(specs)
     return df.groupBy("symbol").applyInPandas(runner, out_schema)
 
 
-def _make_runner(specs: list[KernelSpec], max_rows: int | None = None):
+def _make_runner(specs: list[KernelSpec]):
     """Build the per-group pandas function for a kernel pass.
 
     Kernels execute on a NARROW working frame (ts + the union of declared
@@ -189,7 +201,7 @@ def _make_runner(specs: list[KernelSpec], max_rows: int | None = None):
 
     fns = [s.fn for s in specs]
     # _pts_rn0 (global 0-based row position, present only under the
-    # epoch-chunked path) rides along so shift-sensitive kernels (the
+    # row-chunked route) rides along so shift-sensitive kernels (the
     # OLS family) can regress against the same global x as whole groups.
     need = ["ts", "_pts_rn0"]
     for s in specs:
@@ -199,12 +211,12 @@ def _make_runner(specs: list[KernelSpec], max_rows: int | None = None):
     out_cols = [o for s in specs for o in s.outputs]
 
     def runner(pdf):
-        if max_rows is not None and len(pdf) > max_rows:
+        if len(pdf) > MAX_GROUP_ROWS:
             raise ValueError(
                 f"kernel group of {len(pdf)} rows exceeds the per-executor "
-                f"bound ({max_rows}); unbounded-state kernels in this "
-                f"pass prevent epoch chunking — use streaming/ for such "
-                f"series (PTS_MAX_KERNEL_GROUP_ROWS overrides)"
+                f"bound ({MAX_GROUP_ROWS}); run finite-carry kernels through "
+                f"apply_strategy, which row-chunks hot symbols, and "
+                f"unbounded-state kernels through streaming/"
             )
         # Sort the NARROW frame only and splice outputs back through the
         # inverse permutation: gathering the wide pass-through frame
@@ -245,54 +257,3 @@ def _is_sorted(a) -> bool:
 
     return len(a) < 2 or bool(np.all(a[:-1] <= a[1:]))
 
-
-def _run_chunked(
-    df: DataFrame, specs: list[KernelSpec], chunk: int, carry: int,
-    lead: int = 0,
-) -> DataFrame:
-    """Exact chunk-and-carry for finite-carry kernels (SURVEY §4.3.4).
-
-    epoch(row) = rank div chunk; the last `carry` rows of epoch e are
-    UNIONed into epoch e+1 flagged _pts_carry, so each chunk computes with
-    full warm-up context; carried rows' outputs are dropped afterwards.
-    When a spec declares ``lead_rows`` (non-causal columns), the first
-    `lead` rows of epoch e+1 are symmetrically carried BACK into epoch e.
-    Declarative all the way: one bucket-parallel rank (global_rn0 — a
-    single-window rank would serialize a hot symbol's entire history
-    into one sort task, the exact straggler this path exists to avoid)
-    + filtered unions (carry/chunk overhead ratio) + one
-    groupBy(symbol, epoch) pass. The rank's (symbol, bucket)
-    partitioning no longer satisfies the groupBy's clustering, so the
-    pass pays its own (symbol, epoch) exchange — which is what actually
-    PARALLELIZES a hot symbol's epochs (under the old shared symbol
-    exchange all of a hot symbol's epochs landed in one task)."""
-    from pyspark.sql import functions as F
-
-    tagged = global_rn0(df)
-    base = tagged.withColumn(
-        "_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long")
-    ).withColumn("_pts_carry", F.lit(False))
-    spill = (
-        tagged.filter((F.col("_pts_rn0") % chunk) >= chunk - carry)
-        .withColumn("_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long") + 1)
-        .withColumn("_pts_carry", F.lit(True))
-    )
-    u = base.unionByName(spill)
-    if lead > 0:
-        back = (
-            tagged.filter(
-                ((F.col("_pts_rn0") % chunk) < lead) & (F.col("_pts_rn0") >= chunk)
-            )
-            .withColumn(
-                "_pts_epoch", (F.col("_pts_rn0") / chunk).cast("long") - 1
-            )
-            .withColumn("_pts_carry", F.lit(True))
-        )
-        u = u.unionByName(back)
-    out_schema = _out_schema(u, specs)
-    runner = _make_runner(specs)
-
-    out = u.groupBy("symbol", "_pts_epoch").applyInPandas(runner, out_schema)
-    return out.filter(~F.col("_pts_carry")).drop(
-        "_pts_rn0", "_pts_epoch", "_pts_carry"
-    )

@@ -31,7 +31,7 @@ import re
 
 from pandas_ta_spark.functions.windows import SYMBOL, TS
 from pandas_ta_spark.operators.base import Indicator
-from pandas_ta_spark.plans.kernels import run_kernels
+from pandas_ta_spark.plans.kernels import global_rn0, row_chunks, run_kernels
 
 # Per-symbol row count above which apply_strategy auto-routes the
 # chunk-safe indicators through the row-chunked path (VERDICT r12 ask
@@ -108,15 +108,14 @@ def _auto_chunk_size(df: DataFrame, hot: int, lb: int) -> int:
 def split_chunkable(inds: list[Indicator]):
     """Partition a strategy into (lookback, chunk-safe, not-chunk-safe).
 
-    Chunk-safe = the exact predicates ``apply_strategy_chunked``
-    enforces: kernels with finite ``carry_rows`` and no ``lead_rows``;
-    expression indicators whose SQL-twin-introspected lookback is
-    bounded. ``lookback`` is the max depth over the safe set."""
+    Chunk-safe = the exact predicates ``apply_strategy_chunked_rows``
+    enforces: kernels with finite ``carry_rows`` (``lead_rows`` rows are
+    carried backward by ``plans/kernels.row_chunks``); expression
+    indicators whose SQL-twin-introspected lookback is bounded.
+    ``lookback`` is the max depth over the safe set."""
     lb, safe, unsafe = 0, [], []
     for ind in inds:
-        if ind.kernel is not None and (
-                ind.kernel.carry_rows is None
-                or getattr(ind.kernel, "lead_rows", 0)):
+        if ind.kernel is not None and ind.kernel.carry_rows is None:
             unsafe.append(ind)
             continue
         depth = expression_lookback(ind)
@@ -128,9 +127,13 @@ def split_chunkable(inds: list[Indicator]):
     return lb, safe, unsafe
 
 
+def _max_lead(inds: list[Indicator]) -> int:
+    return max((i.kernel.lead_rows for i in inds if i.kernel is not None),
+               default=0)
+
+
 def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = False,
-                   auto_chunk_rows: int | None = AUTO_CHUNK_ROWS,
-                   kernel_chunk_rows: int | None = None) -> DataFrame:
+                   auto_chunk_rows: int | None = AUTO_CHUNK_ROWS) -> DataFrame:
     """Append every indicator's output columns in one composite plan.
 
     Stage maps are merged ACROSS indicators layer by layer (an
@@ -140,13 +143,18 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
     layer, same single exchange+sort.
 
     Skew auto-routing (``auto_chunk_rows``, default 1M; pass ``None``
-    to pin the single-pass plan): when the hottest symbol holds more
-    rows than the threshold (one memoized count-by-symbol job), the
-    chunk-safe indicators run through ``apply_strategy_chunked_rows``
-    — bit-identical outputs, hot partition split into parallel
-    (symbol, chunk) tasks — and the rest (EWM/cumulative: genuinely
-    sequential per symbol) append on top via the plain path. Removes
-    the measured 14x hot-symbol trap without the caller asking."""
+    to pin the single-pass plan): this router is the ONE place that
+    decides to chunk — the kernel pass itself always runs whole symbol
+    groups. When the hottest symbol holds more rows than the threshold
+    (one memoized count-by-symbol job, skipped when plan statistics
+    prove the input small), the chunk-safe indicators (bounded windows,
+    finite-carry kernels including lead-row ones) run through
+    ``apply_strategy_chunked_rows`` — bit-identical outputs, hot
+    partition split into parallel (symbol, chunk) tasks — and the rest
+    (EWM/cumulative: genuinely sequential per symbol) join back from
+    the plain path. Removes the measured 14x hot-symbol trap without
+    the caller asking. ``auto_chunk_rows=None`` runs every symbol as
+    one group, with no count job and no chunking anywhere."""
     if (auto_chunk_rows and not keep_temps and len(inds) > 0
             and not df.isStreaming):
         # size gate FIRST: split_chunkable regex-introspects every
@@ -158,19 +166,11 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
         # groupBy(symbol).count() job at plan-BUILD time on large batch
         # frames — pass auto_chunk_rows=None to keep plan build lazy.
         hot = _max_rows_per_symbol(df)
-        from pandas_ta_spark.plans.kernels import CHUNK_ROWS as _KCHUNK
-
-        if 0 < hot < _KCHUNK and kernel_chunk_rows is None:
-            # the router's (memoized) count proves every symbol group is
-            # epoch-sized: pin the kernel pass to whole-group execution,
-            # skipping _run_chunked's groupBy(symbol, epoch) layer (one
-            # Exchange + one row_number window) that the stats-only gate
-            # would conservatively keep
-            kernel_chunk_rows = 0
         if hot > auto_chunk_rows:
             lb, safe, unsafe = split_chunkable(inds)
             if safe:
-                chunk_rows = _auto_chunk_size(df, hot, lb)
+                chunk_rows = _auto_chunk_size(df, hot,
+                                              max(lb, _max_lead(safe)))
                 out = apply_strategy_chunked_rows(df, safe, lb, chunk_rows)
                 if unsafe:
                     # the non-chunkable half runs on the NARROW original
@@ -181,16 +181,23 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
                     # pass (measured 30.7s vs 24s plain on the skew
                     # bench; the join shape runs the two independent
                     # stage trees concurrently). Exactness assumes
-                    # (symbol, ts) uniquely keys rows AND is non-NULL —
-                    # the same assumption every per-symbol window here
-                    # makes (an inner join on a NULL key would silently
-                    # drop the row the plain path keeps).
+                    # (symbol, ts) uniquely keys rows, the same
+                    # assumption every per-symbol window here makes.
+                    # symbol matches NULL-safely (a NULL symbol is one
+                    # more series on the plain path); a NULL ts already
+                    # raised on the chunked side.
                     unsafe_outs = {c for i in unsafe for c in i.outputs}
                     drop_cols = [c for c in df.columns
                                  if c not in (SYMBOL, TS)
                                  and c not in unsafe_outs]
-                    add = apply_strategy(df, unsafe, auto_chunk_rows=None)
-                    out = out.join(add.drop(*drop_cols), [SYMBOL, TS])
+                    add = (apply_strategy(df, unsafe, auto_chunk_rows=None)
+                           .drop(*drop_cols)
+                           .withColumnsRenamed({SYMBOL: "_pts_jsym",
+                                                TS: "_pts_jts"}))
+                    out = out.join(
+                        add, F.col(SYMBOL).eqNullSafe(F.col("_pts_jsym"))
+                        & (F.col(TS) == F.col("_pts_jts")),
+                    ).drop("_pts_jsym", "_pts_jts")
                     # restore plain-path column order (ADVICE r13: the
                     # join shape appended unsafe outputs last regardless
                     # of indicator order). The plain path appends
@@ -252,7 +259,7 @@ def apply_strategy(df: DataFrame, inds: list[Indicator], keep_temps: bool = Fals
     # kernel outputs, so the reorder is safe.
     kernels = [i.kernel for i in inds if i.kernel is not None]
     if kernels:
-        df = run_kernels(df, kernels, kernel_chunk_rows)
+        df = run_kernels(df, kernels)
     return df
 
 
@@ -376,8 +383,11 @@ def apply_strategy_chunked(
     validate: bool = False,
 ) -> DataFrame:
     """``apply_strategy`` for per-symbol series too long for one window
-    partition — the expression-path twin of ``plans/kernels.py``'s
-    epoch-chunked execution (which covers the Arrow kernel pass only).
+    partition, chunked by TIME — the opt-in twin of the router's
+    row-chunked ``apply_strategy_chunked_rows`` (r15: 3.7s vs 4.3s on
+    the x20skew80 shape, so it stays). Unlike the row route it refuses
+    kernels with ``lead_rows``: its successor map carries history
+    forward only.
 
     WindowExec buffers an entire (symbol) partition; a multi-year tick
     series for one instrument can exceed executor memory. This splits
@@ -412,14 +422,11 @@ def apply_strategy_chunked(
     union, then the normal strategy over the salted symbol — the same
     shuffles as ``apply_strategy``, each partition now chunk-sized.
     """
-    _reject_unchunkable(inds, lookback)
-    if any(i.kernel is not None and getattr(i.kernel, "pos_dependent", False)
-           for i in inds):
+    _reject_unchunkable(inds, lookback, lead_ok=False)
+    if any(i.kernel is not None and i.kernel.pos_dependent for i in inds):
         # position-dependent kernels (OLS family) need the global rank
         # to keep chunked x bit-identical to the whole-group x; only
         # pay the rank subtree when such a kernel is present
-        from pandas_ta_spark.plans.kernels import global_rn0
-
         df = global_rn0(df, out="_pts_rn0")
     # .cast: parquet TIMESTAMP_NTZ inputs — unix_micros wants TIMESTAMP
     us = F.unix_micros(F.col(TS).cast("timestamp"))
@@ -457,9 +464,12 @@ def apply_strategy_chunked(
         base.withColumn("_rnd", F.row_number().over(wdesc))
         .filter(F.col("_rnd") <= lookback)
         .drop("_rnd")
-        .join(F.broadcast(succ), [SYMBOL, "_chk"])
+        .join(F.broadcast(succ.withColumnRenamed(SYMBOL, "_pts_jsym")
+                          .withColumnRenamed("_chk", "_pts_jchk")),
+              F.col(SYMBOL).eqNullSafe(F.col("_pts_jsym"))
+              & (F.col("_chk") == F.col("_pts_jchk")))
         .withColumn("_chk", F.col("_next"))
-        .drop("_next")
+        .drop("_next", "_pts_jsym", "_pts_jchk")
         .withColumn("_carry", F.lit(1))
     )
     u = base.withColumn("_carry", F.lit(0)).unionByName(carry)
@@ -469,15 +479,21 @@ def apply_strategy_chunked(
 def _salt_apply_unsalt(u: DataFrame, inds: list[Indicator]) -> DataFrame:
     """Shared tail of the chunked paths: salt symbol with the chunk id,
     run the normal one-plan strategy over the salted key (auto-routing
-    off — the groups are chunk-bounded by construction), drop carries."""
+    off — the groups are chunk-bounded by construction), drop carries.
+
+    A NULL symbol salts to the bare chunk id, which no '#'-joined real
+    symbol can equal. A NULL ts raises (lazily, in the pass's own job):
+    the window order and the kernel runner's argsort place NULL ts
+    differently, so chunk assignment could not match both."""
+    chk = F.when(
+        F.col(TS).isNull(),
+        F.raise_error(F.lit("chunked strategy: NULL ts cannot be placed "
+                            "in a row or time chunk")),
+    ).otherwise(F.col("_chk").cast("string"))
     salted = u.withColumn("_sym", F.col(SYMBOL)).withColumn(
-        SYMBOL, F.concat_ws("#", SYMBOL, F.col("_chk").cast("string"))
+        SYMBOL, F.concat_ws("#", SYMBOL, chk)
     )
-    # kernel_chunk_rows=0: the salted (symbol, chunk) groups are
-    # chunk-bounded by construction, so the kernel pass must not stack
-    # its own epoch-chunk layer (an extra Exchange) on top
-    out = apply_strategy(salted, inds, auto_chunk_rows=None,
-                         kernel_chunk_rows=0)
+    out = apply_strategy(salted, inds, auto_chunk_rows=None)
     out = (
         out.filter(F.col("_carry") == 0)
         .withColumn(SYMBOL, F.col("_sym"))
@@ -488,14 +504,16 @@ def _salt_apply_unsalt(u: DataFrame, inds: list[Indicator]) -> DataFrame:
     return out.drop("_pts_rn0") if "_pts_rn0" in out.columns else out
 
 
-def _reject_unchunkable(inds: list[Indicator], lookback: int) -> None:
+def _reject_unchunkable(inds: list[Indicator], lookback: int,
+                        lead_ok: bool) -> None:
     """The chunked-exactness contract, both halves (ADVICE r6).
 
-    Bounded-lookback kernels (finite ``carry_rows <= lookback``, no
-    forward-looking rows) chunk exactly like window expressions: the
-    carry replicas are precisely the history their declared carry
-    needs. Unbounded (EWM, carry_rows=None), deeper-than-lookback, or
-    lead-consuming kernels would silently reseed per chunk — reject.
+    Bounded-lookback kernels (finite ``carry_rows <= lookback``) chunk
+    exactly like window expressions: the carry replicas are precisely
+    the history their declared carry needs. Unbounded (EWM,
+    carry_rows=None) or deeper-than-lookback kernels would silently
+    reseed per chunk — reject; so are lead-consuming kernels unless the
+    route carries rows backward (``lead_ok``: the row route does).
     Expression indicators are depth-checked via ``expression_lookback``
     (SQL-twin introspection): a window deeper than the lookback —
     sma(50) under lookback=30 — used to be ACCEPTED and silently
@@ -506,15 +524,16 @@ def _reject_unchunkable(inds: list[Indicator], lookback: int) -> None:
         if i.kernel is not None and (
             i.kernel.carry_rows is None
             or i.kernel.carry_rows > lookback
-            or getattr(i.kernel, "lead_rows", 0)
+            or (i.kernel.lead_rows and not lead_ok)
         )
     ]
     if bad:
+        lead_rule = "" if lead_ok else " and no lead_rows"
         raise ValueError(
-            "apply_strategy_chunked requires bounded-lookback indicators "
-            "(window exprs or kernels with carry_rows <= lookback and no "
-            "lead_rows); EWM/unbounded kernels have their own chunking "
-            f"(plans/kernels.py): {[i.outputs for i in bad]}"
+            "chunked strategies require bounded-lookback indicators "
+            "(window exprs or kernels with carry_rows <= lookback"
+            f"{lead_rule}); EWM/unbounded kernels run whole symbol "
+            f"groups: {[i.outputs for i in bad]}"
         )
     too_deep = []
     unbounded = []
@@ -560,54 +579,18 @@ def apply_strategy_chunked_rows(
     [k*chunk_rows, (k+1)*chunk_rows) of its ts-ordered sequence, so
     every non-last chunk has exactly ``chunk_rows >= lookback`` rows
     and the trailing-``lookback`` carry always fills its successor's
-    frames — bit-identical to the unchunked plan, count-free.
-
-    Plan shape: one bucket-parallel rank (plans/kernels.global_rn0 —
-    r15: the previous single-window row_number buffered the WHOLE hot
-    symbol in one sort task, a ~7s straggler that made this path 2x
-    the time-chunked one on the 1.6M-row skew bench), a broadcast
-    anti-filter is unnecessary (carries to a chunk beyond the symbol's
-    last row can't exist: the filter keeps only tails whose successor
-    chunk index exists among the base rows), then the shared
-    salt/apply/unsalt tail. Determinism note: like every per-symbol
-    window in this engine, exactness assumes (symbol, ts) uniquely
-    orders rows."""
-    if chunk_rows < max(lookback, 1):
+    frames — bit-identical to the unchunked plan, count-free. Kernels
+    with ``lead_rows`` also get the leading rows of the next chunk
+    (``plans/kernels.row_chunks``). The rank stays aboard as
+    ``_pts_rn0``: position-dependent kernels (the OLS family) read it
+    so their x positions stay global (tests/test_r15_rank_and_router.py).
+    Determinism note: like every per-symbol window in this engine,
+    exactness assumes (symbol, ts) uniquely orders rows."""
+    lead = _max_lead(inds)
+    if chunk_rows < max(lookback, lead, 1):
         raise ValueError(
-            f"chunk_rows={chunk_rows} < lookback={lookback}: non-last "
-            "chunks could not carry enough history")
-    _reject_unchunkable(inds, lookback)
-    # single-subtree chunk assignment: each row EXPLODES into its own
-    # chunk entry plus (when it sits in the trailing-lookback positions)
-    # a carry entry for chunk k+1 — no union, so the rank subtree
-    # evaluates ONCE per action (the union/succ-map shape re-ran the
-    # per-symbol sort 3x: measured 9.3s -> 6.5s on the 1.6M-row skew
-    # bench). Carries past a symbol's last chunk land in phantom
-    # (symbol, chunk) groups holding only carry rows — computed over
-    # <= lookback rows and fully dropped by the _carry filter, which is
-    # cheaper than the broadcast successor map that suppressed them.
-    from pandas_ta_spark.plans.kernels import global_rn0
-
-    # the rank stays aboard as _pts_rn0: position-dependent kernels (the
-    # OLS family, KernelSpec.pos_dependent) read it inside the salted
-    # pass so their x positions stay GLOBAL — without it each
-    # (symbol, chunk) group reseeds x at 1 and the fit differs from the
-    # plain path at the last ulp (caught by
-    # tests/test_r15_rank_and_router.py)
-    base = global_rn0(df, out="_pts_rn0")
-    chk = F.floor(F.col("_pts_rn0") / F.lit(chunk_rows)).cast("long")
-    pos = F.col("_pts_rn0") % F.lit(chunk_rows)
-    pairs = F.array(
-        F.struct(chk.alias("_chk"), F.lit(0).alias("_carry")),
-        F.when(pos >= F.lit(chunk_rows - lookback),
-               F.struct((chk + F.lit(1)).alias("_chk"),
-                        F.lit(1).alias("_carry"))),
-    )
-    u = (
-        base.select("*", F.explode(
-            F.filter(pairs, lambda x: x.isNotNull())).alias("_pc"))
-        .withColumn("_chk", F.col("_pc._chk"))
-        .withColumn("_carry", F.col("_pc._carry"))
-        .drop("_pc")
-    )
-    return _salt_apply_unsalt(u, inds)
+            f"chunk_rows={chunk_rows} < lookback={lookback} or "
+            f"lead_rows={lead}: non-last chunks could not carry enough rows")
+    _reject_unchunkable(inds, lookback, lead_ok=True)
+    return _salt_apply_unsalt(row_chunks(df, chunk_rows, lookback, lead),
+                              inds)

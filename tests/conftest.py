@@ -53,6 +53,38 @@ def bars(spark, pdf_bars):
     return spark.createDataFrame(pdf_bars).repartition(4)
 
 
+def min_row_chunks(pdf: pd.DataFrame, chunk_rows: int,
+                   symbol: str | None = None) -> int:
+    """Fewest ``chunk_rows``-row chunks any symbol of ``pdf`` (or the
+    named one) spans, counted from the data: a chunk-parity test asserts
+    it to prove it crossed chunk boundaries."""
+    sizes = pdf.groupby("symbol", dropna=False).size()
+    if symbol is not None:
+        sizes = sizes[[symbol]]
+    return int(-(-sizes.min() // chunk_rows))
+
+
+def route_rows(monkeypatch, chunk_rows: int) -> list[int]:
+    """Make the strategy router's row route testable on small frames:
+    plan statistics never skip the count, every routed call uses
+    ``chunk_rows``-row chunks (the real size floors at 4,096 rows), and
+    the returned list records the chunk size of each routed call."""
+    from pandas_ta_spark.plans import strategy as S
+
+    routed: list[int] = []
+    real = S.apply_strategy_chunked_rows
+
+    def spy(df, inds, lookback, chunk):
+        routed.append(chunk)
+        return real(df, inds, lookback, chunk)
+
+    monkeypatch.setattr(S, "apply_strategy_chunked_rows", spy)
+    monkeypatch.setattr(S, "_AUTO_CHUNK_MIN_BYTES", 0)
+    monkeypatch.setattr(S, "_auto_chunk_size",
+                        lambda df, hot, lb: chunk_rows)
+    return routed
+
+
 def one_symbol(out: pd.DataFrame, symbol: str = "A") -> pd.DataFrame:
     return (out[out["symbol"] == symbol]
             .sort_values("ts").reset_index(drop=True))

@@ -2313,8 +2313,11 @@ def test_chunked_rows_strategy_exact_parity(spark, bars):
     inds = [overlap.sma(20), overlap.wma(10), statistics.stdev(30),
             volatility.donchian(20), momentum.roc(10), momentum.mom(10),
             trend.aroon(14)]
+    from tests.conftest import min_row_chunks
+
     plain = (apply_strategy(bars, inds, auto_chunk_rows=None).toPandas()
              .sort_values(["symbol", "ts"]).reset_index(drop=True))
+    assert min_row_chunks(plain, 64) >= 2  # the 30 and 64 cases carry
     for chunk_rows in (30, 64, 100_000):  # == lookback, mid, > series
         chunked = (apply_strategy_chunked_rows(
             bars, inds, lookback=30, chunk_rows=chunk_rows)
@@ -2373,13 +2376,14 @@ def test_auto_router_skips_streaming_and_statless_frames(spark, tmp_path,
 def test_auto_chunk_routing_skewed_parity(spark, monkeypatch):
     """The r13 skew auto-router: a plain apply_strategy call on a frame
     whose hottest symbol exceeds the threshold must (a) actually take
-    the row-chunked path and (b) return bit-identical results — with
-    the non-chunkable EWM/cumulative indicators appended on top."""
+    the row-chunked path, with the hot symbol spanning several chunks,
+    and (b) return bit-identical results — with the non-chunkable
+    EWM/cumulative indicators joined back from the plain path."""
     import pandas as pd
 
     from pandas_ta_spark.operators import momentum, overlap, statistics
     from pandas_ta_spark.plans import strategy as S
-    from tests.conftest import make_pdf
+    from tests.conftest import make_pdf, min_row_chunks, route_rows
 
     pdf = pd.concat([make_pdf(2500, 7, "HOT"), make_pdf(300, 11, "B")],
                     ignore_index=True)
@@ -2390,18 +2394,11 @@ def test_auto_chunk_routing_skewed_parity(spark, monkeypatch):
     plain = (S.apply_strategy(df, inds, auto_chunk_rows=None).toPandas()
              .sort_values(["symbol", "ts"]).reset_index(drop=True))
 
-    routed = {"n": 0}
-    real = S.apply_strategy_chunked_rows
-
-    def spy(*a, **k):
-        routed["n"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(S, "apply_strategy_chunked_rows", spy)
-    monkeypatch.setattr(S, "_AUTO_CHUNK_MIN_BYTES", 0)
+    routed = route_rows(monkeypatch, 800)
     auto = (S.apply_strategy(df, inds, auto_chunk_rows=1000).toPandas()
             .sort_values(["symbol", "ts"]).reset_index(drop=True))
-    assert routed["n"] == 1  # the router fired, no opt-in
+    assert routed == [800]  # the router fired, no opt-in
+    assert min_row_chunks(plain, 800, "HOT") >= 3
     # exact order, not set-equality: the routed join re-selects columns
     # into plain-path order (ADVICE r13)
     assert list(plain.columns) == list(auto.columns)
@@ -2416,10 +2413,10 @@ def test_auto_chunk_routing_skewed_parity(spark, monkeypatch):
     # below the threshold the router must NOT fire (fresh frame object:
     # the hot-rows memo is per DataFrame identity)
     df2 = spark.createDataFrame(pdf).repartition(4)
-    routed["n"] = 0
+    routed.clear()
     out = S.apply_strategy(df2, inds, auto_chunk_rows=1_000_000)
     out.limit(1).collect()
-    assert routed["n"] == 0
+    assert routed == []
 
 
 def test_auto_chunk_routing_dotted_output_names(spark, monkeypatch):
@@ -2428,16 +2425,18 @@ def test_auto_chunk_routing_dotted_output_names(spark, monkeypatch):
     struct field access (r14 bench crash at HEAD e8d30a4)."""
     from pandas_ta_spark.operators import momentum, overlap, volatility
     from pandas_ta_spark.plans import strategy as S
-    from tests.conftest import make_pdf
+    from tests.conftest import make_pdf, min_row_chunks, route_rows
 
     df = spark.createDataFrame(make_pdf(1500, 7, "HOT")).repartition(2)
     inds = [momentum.cci(14), volatility.bbands(), overlap.ema(10)]
 
     plain = (S.apply_strategy(df, inds, auto_chunk_rows=None).toPandas()
              .sort_values(["symbol", "ts"]).reset_index(drop=True))
-    monkeypatch.setattr(S, "_AUTO_CHUNK_MIN_BYTES", 0)
+    routed = route_rows(monkeypatch, 400)
     auto = (S.apply_strategy(df, inds, auto_chunk_rows=500).toPandas()
             .sort_values(["symbol", "ts"]).reset_index(drop=True))
+    assert routed == [400]
+    assert min_row_chunks(plain, 400) >= 3
     assert list(plain.columns) == list(auto.columns)
     for c in plain.columns:
         a, b = plain[c], auto[c]

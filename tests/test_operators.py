@@ -334,12 +334,15 @@ def test_drawdown(bars, pdf_bars):
 # ------------------------------------------------------ kernel chunking ----
 
 def test_chunked_kernels_match_unchunked(bars):
-    """Epoch-chunked execution (plans/kernels.py _run_chunked) must be
-    EXACTLY the unchunked result: chunk=80 forces 4 chunks on the 300-row
-    symbol A / 250-row symbol B fixture across every finite-carry kernel
-    family (order stats, moments, min/max, argmax-distance, chained rolls)."""
-    from pandas_ta_spark.plans.kernels import run_kernels
+    """Row-chunked execution (plans/kernels.row_chunks behind
+    apply_strategy_chunked_rows) must be EXACTLY the unchunked result:
+    chunk=80 forces 4 chunks on the 300-row symbol A / 250-row symbol B
+    fixture across every finite-carry kernel family (order stats,
+    moments, min/max, argmax-distance, chained rolls)."""
+    from pandas_ta_spark.plans.strategy import (
+        apply_strategy, apply_strategy_chunked_rows)
     from pandas_ta_spark.operators import momentum, statistics, trend, volatility, volume
+    from tests.conftest import min_row_chunks
 
     inds = [statistics.median(30), statistics.stdev(30), statistics.mad(30),
             statistics.entropy(10), statistics.skew(30),
@@ -349,9 +352,12 @@ def test_chunked_kernels_match_unchunked(bars):
     specs = [i.kernel for i in inds]
     assert all(s.carry_rows is not None for s in specs)
     cols = sorted(o for s in specs for o in s.outputs)
-    whole = run_kernels(bars, specs, chunk_rows=10**9)
-    chunked = run_kernels(bars, specs, chunk_rows=80)
-    a = whole.orderBy("symbol", "ts").toPandas()[cols]
+    lb = max(s.carry_rows for s in specs)
+    whole = apply_strategy(bars, inds, auto_chunk_rows=None)
+    chunked = apply_strategy_chunked_rows(bars, inds, lb, chunk_rows=80)
+    pw = whole.orderBy("symbol", "ts").toPandas()
+    assert min_row_chunks(pw, 80) >= 2
+    a = pw[cols]
     b = chunked.orderBy("symbol", "ts").toPandas()[cols]
     assert len(a) == len(b) == 550
     for c in cols:
@@ -360,25 +366,23 @@ def test_chunked_kernels_match_unchunked(bars):
         assert same.all(), f"{c}: {int((~same).sum())} rows differ"
 
 
-def test_chunked_kernels_skewed_hot_symbol(spark):
+def test_chunked_kernels_skewed_hot_symbol(spark, monkeypatch):
     """Skewed-universe stress (VERDICT r10 ask #6): ONE symbol holds 80%
-    of all rows — at production scale that symbol exceeds CHUNK_ROWS and
-    epoch-chunks while simultaneously being the hot hash partition.
-    Chunked output must EXACTLY equal unchunked on the skewed frame,
-    through a full strategy pass (window stages + kernel pass sharing
-    the hot hash(symbol) exchange), including planted NaN bars inside
-    the hot symbol's chunk boundaries."""
-    from tests.conftest import make_pdf
-    from pandas_ta_spark.plans import kernels as K
-    from pandas_ta_spark.plans.strategy import apply_strategy
+    of all rows — at production scale that symbol exceeds the router's
+    threshold and row-chunks while simultaneously being the hot hash
+    partition. Routed output must EXACTLY equal unchunked on the skewed
+    frame, through a full strategy pass, including planted NaN bars
+    inside the hot symbol's chunk boundaries."""
+    from tests.conftest import make_pdf, min_row_chunks, route_rows
+    from pandas_ta_spark.plans import strategy as S
     from pandas_ta_spark.operators import momentum, statistics, volatility
 
     # HOT: 2400 rows (80%); four cold symbols: 150 rows each (20%)
     frames = [make_pdf(2400, 3, "HOT")]
     frames += [make_pdf(150, 11 + i, f"C{i}") for i in range(4)]
     pdf = pd.concat(frames, ignore_index=True)
-    # NaN bars land inside the hot symbol, straddling the 500-row epoch
-    # grid (rows 499/500 are an epoch boundary at chunk_rows=500)
+    # NaN bars land inside the hot symbol, straddling the 500-row chunk
+    # grid (rows 499/500 are a chunk boundary at chunk_rows=500)
     for r in (499, 500, 1203):
         pdf.loc[r, ["high", "low", "close"]] = np.nan
     df = spark.createDataFrame(pdf).repartition(8)
@@ -387,16 +391,14 @@ def test_chunked_kernels_skewed_hot_symbol(spark):
             volatility.bbands(), volatility.donchian()]
     cols = sorted(o for i in inds for o in i.kernel.outputs)
 
-    old = K.CHUNK_ROWS
-    try:
-        K.CHUNK_ROWS = 500  # hot symbol -> 5 epochs; cold symbols -> 1
-        chunked = (apply_strategy(df, inds).orderBy("symbol", "ts")
-                   .toPandas())
-        K.CHUNK_ROWS = 10**9
-        whole = (apply_strategy(df, inds).orderBy("symbol", "ts")
-                 .toPandas())
-    finally:
-        K.CHUNK_ROWS = old
+    whole = (S.apply_strategy(df, inds, auto_chunk_rows=None)
+             .orderBy("symbol", "ts").toPandas())
+    routed = route_rows(monkeypatch, 500)
+    # hot symbol (2400 rows) > threshold -> 5 chunks; cold symbols -> 1
+    chunked = (S.apply_strategy(df, inds, auto_chunk_rows=1000)
+               .orderBy("symbol", "ts").toPandas())
+    assert routed == [500]
+    assert min_row_chunks(whole, 500, "HOT") >= 3
 
     assert len(whole) == len(chunked) == 3000
     for c in cols:
@@ -406,20 +408,29 @@ def test_chunked_kernels_skewed_hot_symbol(spark):
         assert same.all(), f"{c}: {int((~same).sum())} rows differ"
 
 
-def test_chunked_kernel_forward_carry(bars):
+def test_chunked_kernel_forward_carry(bars, monkeypatch):
     """lead_rows chunking: ichimoku's chikou column reads kijun-1 FUTURE
-    rows, so epoch e must receive the leading rows of epoch e+1
-    (plans/kernels.py _run_chunked backward spill). chunk=80 > carry=77
-    and > lead=25 forces the chunked path; equality must be exact."""
+    rows, so chunk k must receive the leading rows of chunk k+1
+    (plans/kernels.row_chunks backward copy). The router takes such
+    kernels into its chunk-safe set; chunk=80 >= carry and > lead=25,
+    and equality must be exact."""
     from pandas_ta_spark.operators.overlap import ichimoku
-    from pandas_ta_spark.plans.kernels import run_kernels
+    from pandas_ta_spark.plans import strategy as S
+    from tests.conftest import min_row_chunks, route_rows
 
-    spec = ichimoku().kernel
+    ind = ichimoku()
+    spec = ind.kernel
     assert spec.carry_rows is not None and spec.lead_rows > 0
+    assert S.split_chunkable([ind])[1] == [ind]
     cols = sorted(spec.outputs)
-    whole = run_kernels(bars, [spec], chunk_rows=10**9)
-    chunked = run_kernels(bars, [spec], chunk_rows=80)
-    a = whole.orderBy("symbol", "ts").toPandas()[cols]
+    whole = S.apply_strategy(bars, [ind], auto_chunk_rows=None)
+    routed = route_rows(monkeypatch, 80)
+    # a fresh frame object: the router memoizes hot-row counts per frame
+    chunked = S.apply_strategy(bars.select("*"), [ind], auto_chunk_rows=100)
+    assert routed == [80]
+    pw = whole.orderBy("symbol", "ts").toPandas()
+    assert min_row_chunks(pw, 80) >= 2
+    a = pw[cols]
     b = chunked.orderBy("symbol", "ts").toPandas()[cols]
     assert len(a) == len(b) == 550
     for c in cols:

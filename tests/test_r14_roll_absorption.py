@@ -1,9 +1,10 @@
 """r14 ROLL absorption: the converted Arrow kernels must be EXACT under
-epoch-chunked execution (plans/kernels.py _run_chunked) — the declared
-carry_rows/lead_rows are the contract that lets one hot symbol split
-into parallel chunks at 100 TB without changing a single output bit.
+row-chunked execution (plans/kernels.row_chunks behind
+apply_strategy_chunked_rows) — the declared carry_rows/lead_rows are the
+contract that lets one hot symbol split into parallel chunks at 100 TB
+without changing a single output bit.
 
-Each converted indicator runs whole-group vs chunked-with-tiny-epochs on
+Each converted indicator runs whole-group vs chunked-with-tiny-chunks on
 a 2-symbol frame and must match bit-for-bit (NaN == NaN)."""
 
 from __future__ import annotations
@@ -66,7 +67,9 @@ CONVERTED = [
 def test_chunked_equals_whole_group(spark, path, kw):
     import importlib
 
-    from pandas_ta_spark.plans.kernels import run_kernels
+    from pandas_ta_spark.plans.strategy import (
+        apply_strategy, apply_strategy_chunked_rows)
+    from tests.conftest import min_row_chunks
 
     mod_name, fn_name = path.split(".")
     mod = importlib.import_module(f"pandas_ta_spark.operators.{mod_name}")
@@ -74,14 +77,16 @@ def test_chunked_equals_whole_group(spark, path, kw):
     assert ind.kernel is not None, path
     assert ind.kernel.carry_rows is not None, path
     df = _frame(spark)
-    kernels = [ind.kernel]
     # chunk barely above the declared carry/lead: the hardest split
     chunk = max(ind.kernel.carry_rows, ind.kernel.lead_rows) + 3
-    whole = (run_kernels(df, kernels, chunk_rows=0)
+    whole = (apply_strategy(df, [ind], auto_chunk_rows=None)
              .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
-    chunked = (run_kernels(df, kernels, chunk_rows=chunk)
-               .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
+    chunked = (apply_strategy_chunked_rows(
+        df, [ind], lookback=ind.kernel.carry_rows, chunk_rows=chunk)
+        .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
+    assert min_row_chunks(whole, chunk) >= 2
     assert list(whole.columns) == list(chunked.columns)
+    assert len(whole) == len(chunked)
     for c in ind.kernel.outputs:
         a = whole[c].to_numpy()
         b = chunked[c].to_numpy()

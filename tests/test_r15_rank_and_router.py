@@ -1,14 +1,17 @@
 """r15: the bucket-parallel per-symbol rank (plans/kernels.global_rn0)
 must equal the single-window row_number it replaced, for any bucket
-width — it feeds both chunked execution paths (epoch-chunked kernels,
-row-chunked strategies), where a wrong rank silently shifts chunk
-boundaries and OLS x positions."""
+width — it feeds the row-chunk construction (plans/kernels.row_chunks)
+and the OLS x positions of both chunked strategy routes, where a wrong
+rank silently shifts chunk boundaries and fits. NULL keys must keep
+their rows on every route, or raise."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
+
+from tests.conftest import make_pdf, min_row_chunks, route_rows
 
 
 def _frame(spark, n=3000, symbols=("A", "B", "C")):
@@ -70,6 +73,7 @@ def test_row_chunked_strategy_exact_on_multiday_frame(spark):
     chunked = (apply_strategy_chunked_rows(df, inds, lookback=19,
                                            chunk_rows=257)
                .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
+    assert min_row_chunks(plain, 257) >= 2
     assert list(plain.columns) == list(chunked.columns)
     for c in ("SMA_20", "LR_14", "CFO_9"):
         a = plain[c].to_numpy()
@@ -98,9 +102,116 @@ def test_renamed_ols_kernel_keeps_pos_dependent(spark):
     chunked = (apply_strategy_chunked_rows(df, inds, lookback=19,
                                            chunk_rows=311)
                .toPandas().sort_values(["symbol", "ts"]).reset_index(drop=True))
+    assert min_row_chunks(plain, 311) >= 2
     assert "PRE_LR_14" in plain.columns
     for c in ("PRE_LR_14", "SMA_20"):
         a = plain[c].to_numpy()
         b = chunked[c].to_numpy()
         same = (a == b) | (np.isnan(a) & np.isnan(b))
         assert same.all(), (c, int((~same).sum()))
+
+
+def test_row_chunks_layout(spark):
+    """Each row lands in its own chunk, plus a forward copy when it is
+    in its chunk's last ``carry`` positions and a backward copy when it
+    is in the first ``lead`` positions of a chunk after the first — for
+    a NULL symbol too, and without a Union (one rank evaluation)."""
+    from pandas_ta_spark.plans.kernels import row_chunks
+
+    df = spark.createDataFrame(pd.concat(
+        [make_pdf(47, 3, "A"), make_pdf(23, 5, None)], ignore_index=True))
+    u = row_chunks(df, chunk_rows=10, carry=3, lead=2)
+    assert "Union" not in u._jdf.queryExecution().optimizedPlan().toString()
+    got = sorted(
+        (r["symbol"] or "", r["_pts_rn0"], r["_chk"], r["_carry"])
+        for r in u.select("symbol", "_pts_rn0", "_chk", "_carry").collect())
+    want = []
+    for sym, n in (("A", 47), ("", 23)):
+        for rn in range(n):
+            k, pos = divmod(rn, 10)
+            want.append((sym, rn, k, 0))
+            if pos >= 10 - 3:
+                want.append((sym, rn, k + 1, 1))
+            if pos < 2 and k > 0:
+                want.append((sym, rn, k - 1, 1))
+    assert got == sorted(want)
+
+
+def _null_symbol_frame(spark):
+    return spark.createDataFrame(pd.concat(
+        [make_pdf(300, 3, "A"), make_pdf(250, 5, None),
+         make_pdf(200, 9, "B")], ignore_index=True)).repartition(3)
+
+
+def _assert_same(want: pd.DataFrame, got: pd.DataFrame, cols) -> None:
+    want = want.sort_values(["symbol", "ts"]).reset_index(drop=True)
+    got = got.sort_values(["symbol", "ts"]).reset_index(drop=True)
+    assert len(want) == len(got)
+    for c in ["symbol", "ts", *cols]:
+        a, b = want[c], got[c]
+        same = (a == b) | (a.isna() & b.isna())
+        assert same.all(), (c, int((~same).sum()))
+
+
+def test_null_symbol_parity_across_routes(spark, monkeypatch):
+    """A NULL-symbol series is one more series on every route: the
+    plain path, the row route (with a lead-row kernel), the time route,
+    the auto-router with its plain-path join-back, and Indicator.apply
+    (plain and routed) give the plain path's rows and values bit for
+    bit. The rank's inner join used to drop the NULL-symbol rows."""
+    from pandas_ta_spark.operators import momentum, overlap, statistics, trend
+    from pandas_ta_spark.plans import strategy as S
+
+    df = _null_symbol_frame(spark)
+    inds = [overlap.sma(20), statistics.stdev(30), momentum.slope(5),
+            trend.dpo(centered=True), overlap.ema(10)]
+    cols = [c for i in inds for c in i.outputs]
+    plain = S.apply_strategy(df, inds, auto_chunk_rows=None).toPandas()
+    assert plain["symbol"].isna().sum() == 250
+    assert min_row_chunks(plain, 64) >= 2
+    for ind in inds:
+        _assert_same(plain, ind.apply(df).toPandas(), ind.outputs)
+
+    lb, safe, unsafe = S.split_chunkable(inds)
+    rows = S.apply_strategy_chunked_rows(df, safe, lb, 64).toPandas()
+    _assert_same(plain, rows, [c for i in safe for c in i.outputs])
+    assert [i.key for i in unsafe] == ["ema"]
+
+    no_lead = [i for i in safe if not i.kernel or not i.kernel.lead_rows]
+    timed = S.apply_strategy_chunked(df, no_lead, lb, chunk="3 days")
+    _assert_same(plain, timed.toPandas(),
+                 [c for i in no_lead for c in i.outputs])
+
+    routed = route_rows(monkeypatch, 64)
+    auto = S.apply_strategy(df, inds, auto_chunk_rows=100).toPandas()
+    assert routed == [64]
+    assert list(auto.columns) == list(plain.columns)
+    _assert_same(plain, auto, cols)
+
+    # Indicator.apply through the router: every symbol counts as hot
+    monkeypatch.setattr(S, "_max_rows_per_symbol", lambda df_: 2_000_000)
+    for ind in inds:
+        _assert_same(plain, ind.apply(df).toPandas(), ind.outputs)
+    assert routed == [64] * (1 + len(safe))
+
+
+def test_null_ts_raises_on_chunked_routes(spark, monkeypatch):
+    """The window order and the kernel runner's argsort place a NULL ts
+    differently, so no chunk assignment matches the plain path: every
+    chunked route raises on it instead of dropping or misplacing it."""
+    from pandas_ta_spark.operators import overlap, statistics
+    from pandas_ta_spark.plans import strategy as S
+
+    pdf = pd.concat([make_pdf(400, 3, "A"), make_pdf(400, 5, "B")],
+                    ignore_index=True)
+    pdf.loc[100, "ts"] = pd.NaT
+    df = spark.createDataFrame(pdf)
+    assert df.filter("ts IS NULL").count() == 1
+    inds = [overlap.sma(20), statistics.stdev(30)]
+    with pytest.raises(Exception, match="NULL ts"):
+        S.apply_strategy_chunked_rows(df, inds, 29, 64).collect()
+    with pytest.raises(Exception, match="NULL ts"):
+        S.apply_strategy_chunked(df, inds, 29, chunk="3 days").collect()
+    route_rows(monkeypatch, 64)
+    with pytest.raises(Exception, match="NULL ts"):
+        S.apply_strategy(df, inds, auto_chunk_rows=100).collect()

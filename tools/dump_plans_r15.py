@@ -6,8 +6,9 @@ Writes plans/r15/<name>_<suffix>.txt for each target (default: all).
 Bench-context targets (the tick strategies) are built exactly like
 bench.py builds them — symbol-partitioned cached ticks, 11 shuffle
 partitions — so the dumped plan is the plan the bench times. The
-chunked-kernel target pins the epoch-chunk path (the plan the parity
-fix executes); the auto-routed target forces the skew route.
+row-chunked targets pin the route the skew router takes (the linreg one
+is the plan the OLS parity fix executes). Ext targets use the same sf
+dir as the bench's LLM pack.
 """
 from __future__ import annotations
 
@@ -46,13 +47,12 @@ def main():
     strat24 = strategy_indicators()
     all_inds = all_indicators()
 
-    from pandas_ta_spark.plans.kernels import run_kernels
     from pandas_ta_spark.plans.strategy import (
         apply_strategy_chunked_rows, split_chunkable)
     from pandas_ta_spark.registry import make
 
     lb24, safe24, _ = split_chunkable(strat24)
-    linreg_kernel = [make("linreg", length=14).kernel]
+    linreg = make("linreg", length=14)
 
     targets = {
         "tick_strategy_24ind": lambda: apply_strategy(
@@ -61,14 +61,19 @@ def main():
             ticks, all_inds, auto_chunk_rows=None),
         "strategy_bounded_rowchunked": lambda: apply_strategy_chunked_rows(
             ticks, safe24, lb24, 65_536),
-        # the epoch-chunked kernel pass the OLS parity fix executes
-        "kernels_linreg_chunked": lambda: run_kernels(
-            ticks, linreg_kernel, chunk_rows=4096),
+        # the row-chunked kernel pass the OLS parity fix executes
+        "strategy_linreg_rowchunked": lambda: apply_strategy_chunked_rows(
+            ticks, [linreg], linreg.kernel.carry_rows, 4096),
         "dedup_minhash_lsh": lambda: EXT["dedup_minhash_lsh"].query(
             spark, sf_dir),
         "topk_cosine_ivf": lambda: EXT["topk_cosine_ivf"].query(
             spark, sf_dir),
         "topk_cosine_ivfpq": lambda: EXT["topk_cosine_ivfpq"].query(
+            spark, sf_dir),
+        "topk_cosine_pq_rerank": lambda: EXT["topk_cosine_pq_rerank"].query(
+            spark, sf_dir),
+        "text_stats": lambda: EXT["text_stats"].query(spark, sf_dir),
+        "shard_pack_tokens": lambda: EXT["shard_pack_tokens"].query(
             spark, sf_dir),
     }
     for name, build in targets.items():
